@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Per-round benchmark: times every SparkEntry query at the given sf.
@@ -52,16 +51,8 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Sessions.envCpus
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     def loadAvg: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
@@ -98,7 +89,7 @@ object Bench {
     val calT0 = System.nanoTime(); burn()
     val calibSingle = (System.nanoTime() - calT0) / 1e9
     val calT1 = System.nanoTime()
-    val calThreads = (1 to cpus.toInt).map(_ => new Thread(() => burn()))
+    val calThreads = (1 to cpus).map(_ => new Thread(() => burn()))
     calThreads.foreach(_.start()); calThreads.foreach(_.join())
     val calibParallel = (System.nanoTime() - calT1) / 1e9
     def noop(name: String): Unit =
@@ -135,7 +126,7 @@ object Bench {
     // offsets (full artifact) localize it regardless. Measured BEFORE the
     // re-measure phase so the drift signal can arm it (below).
     val calT2 = System.nanoTime()
-    val calThreads2 = (1 to cpus.toInt).map(_ => new Thread(() => burn()))
+    val calThreads2 = (1 to cpus).map(_ => new Thread(() => burn()))
     calThreads2.foreach(_.start()); calThreads2.foreach(_.join())
     val calibParallelEnd = (System.nanoTime() - calT2) / 1e9
     // Warm-side self-adjudication (VERDICT r13 missing #3): THREE driver

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.GraftExtensions
 import graft.operators._
 import graft.functions.QFunctions
 import graft.streaming.QStreaming
@@ -32,9 +33,14 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("agg_group_q1")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each builder
+    * first installs [[GraftExtensions]] (idempotent), so a session built
+    * outside `Sessions.local` gets the engine's functions and strategy. */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    packs.flatMap(_.queries).toMap
+    packs.flatMap(_.queries).map { case (key, build) =>
+      key -> { (s: SparkSession, d: String) =>
+        GraftExtensions.install(s); build(s, d) }
+    }.toMap
 
   /** DuckDB-runnable ANSI SQL per key; keys absent here (HLL sketch,
     * watermark semantics) are covered by scalatest instead. */

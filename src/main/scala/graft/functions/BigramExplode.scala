@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
@@ -55,13 +54,4 @@ case class BigramExplode(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): BigramExplode =
     copy(child = newChild)
-}
-
-object BigramExplode {
-  /** Register `bigrams(array<string>)` as a SQL generator function. */
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("bigrams",
-        (exprs: Seq[Expression]) => BigramExplode(exprs.head), "scala_udf")
 }

@@ -70,16 +70,3 @@ case class SqDiffSum(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): SqDiffSum =
     copy(left = newLeft, right = newRight)
 }
-
-object SqDiffSum {
-  import org.apache.spark.sql.SparkSession
-
-  /** Register `sq_diff_sum(array<bigint>, array<bigint>)` as a SQL
-    * function on the session (same path as `shingles3`). */
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("sq_diff_sum",
-        (exprs: Seq[Expression]) => SqDiffSum(exprs.head, exprs(1)),
-        "scala_udf")
-}

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -54,13 +53,4 @@ case class TrigramShingles(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): TrigramShingles =
     copy(child = newChild)
-}
-
-object TrigramShingles {
-  /** Register `shingles3(array<string>)` as a SQL function. */
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("shingles3",
-        (exprs: Seq[Expression]) => TrigramShingles(exprs.head), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -130,11 +129,4 @@ object VecCentroid {
   /** Oracle-side twin of the per-element quantization. */
   def oQuant(x: String): String =
     s"CAST(floor(($x) * 1000000 + 0.5) AS BIGINT)"
-
-  /** Register `vec_centroid(v)` as a SQL aggregate for this session. */
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("vec_centroid",
-        (exprs: Seq[Expression]) => VecCentroid(exprs.head), "scala_udf")
 }

@@ -62,8 +62,9 @@ object AnnKMeans {
     assignProbes(e, cent, 1)
 
   /** k-means centroids after `iters` Lloyd iterations, materialized each
-    * round (k rows of dim doubles) and re-broadcast. Requires
-    * CosineSim.register + VecCentroid.register on the session. */
+    * round (k rows of dim doubles) and re-broadcast. Uses `cosine_sim`
+    * and `vec_centroid`, which `GraftExtensions.install` puts on the
+    * session. */
   def centroids(e: DataFrame, k: Int, iters: Int): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._

@@ -399,8 +399,6 @@ object QRound5 extends QueryPack {
     * shape identical to sim_ann_kmeans: centroids are KB model state
     * broadcast per round, the corpus only ever scans. */
   private def chpUserSegments(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val f = QPipeline.queries("chp_features_label")(s, d)
     val e = f.select(col("user_id").as("vec_id"),
       array(col("n_events").cast(DoubleType), col("n_clicks").cast(DoubleType),
@@ -577,12 +575,11 @@ object QRound5 extends QueryPack {
     t(s, d, "orders").createOrReplaceTempView("g_orders")
     t(s, d, "lineitem").createOrReplaceTempView("g_lineitem")
     // g_revsum4u: the 128-bit integer spelling of the decimal revenue
-    // sum (registered session aggregate, bit-identical values —
-    // Tables.registerIntSums). The SQL-text surface (parse, joins,
-    // pushdown, TakeOrdered) is the point of this key and is unchanged;
+    // sum (session aggregate from GraftExtensions, bit-identical
+    // values). The SQL-text surface (parse, joins, pushdown, TakeOrdered)
+    // is the point of this key and is unchanged;
     // the filter is selective so the per-group Decimal128 rebuild is
     // cheap next to the 6M-row probe side it replaced decimal math on.
-    registerIntSums(s)
     s.sql(
       """SELECT l_orderkey,
         |  CAST(g_revsum4u(l_extendedprice, l_discount) AS DOUBLE) AS revenue,
@@ -651,27 +648,19 @@ object QRound5 extends QueryPack {
     * coefficients. No oracle (training is not SQL-expressible) — gated by
     * Round5Spec: two runs bit-identical (the spec drives
     * ChurnModel.trainEval directly so the gate re-runs the REAL fit),
-    * AUC within (0.5, 1], confusion counts conserve n_test.
-    *
-    * Result memoized per (session, sfDir) — OPTIMIZATION r17: the fitted
-    * model row is per-corpus MODEL STATE and the 25-iteration L-BFGS loop
-    * is the whole cost of the key (2.1 s warm) — the
-    * katzscores/stressscores result-reuse discipline (VERDICT r12/r13-
-    * blessed). The build still runs under each shuffle-partition setting
-    * (Memo keys on it); emitted coefficients are bit-identical — the
-    * memo changes which call pays, never the bits. */
+    * AUC within (0.5, 1], confusion counts conserve n_test. Every call
+    * runs the fit; only the fold pair is shared (ChurnModel.folds). */
   private def chpTrainAuc(s: SparkSession, d: String): DataFrame =
-    graft.Memo.memo(s, "chptrainauc", d)(ChurnModel.trainEval(s, d))
+    ChurnModel.trainEval(s, d)
 
   /** Regularization sweep over the same deterministic split (see
     * ChurnModel.sweep) — no oracle (training ≠ SQL); Round5Spec gates
     * determinism (driving ChurnModel.sweep directly), per-row AUC bounds,
     * and the shrinkage invariant (coefficient L2 norm strictly decreases
-    * as regParam grows). Result memoized per (session, sfDir) — the same
-    * model-state discipline as chp_train_auc; the two keys additionally
-    * share ONE materialized fold pair (ChurnModel.folds). */
+    * as regParam grows). Every call runs the sweep; it shares ONE
+    * materialized fold pair with chp_train_auc (ChurnModel.folds). */
   private def chpTrainCv(s: SparkSession, d: String): DataFrame =
-    graft.Memo.memo(s, "chptraincv", d)(ChurnModel.sweep(s, d))
+    ChurnModel.sweep(s, d)
 
   /** Batch scoring of the DEPLOYED model: the coefficients below were
     * fitted by `chp_train_auc` at sf0.01 (the verify scale) and frozen —

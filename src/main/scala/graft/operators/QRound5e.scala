@@ -59,8 +59,6 @@ object QRound5e extends QueryPack {
     * the oracle regenerates all 4 codebooks exactly (AnnKMeans chain,
     * prefixed per subspace). */
   private def embPqCodebook(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = QSim.embPersisted(s, d)
     e.count() // materialize the shared cache before the parallel fits race to build it
     // the four subspace codebooks are independent: train them as four

@@ -62,13 +62,11 @@ object QRound5h extends QueryPack {
   private def sqlPipeSyntax(s: SparkSession, d: String): DataFrame = {
     t(s, d, "lineitem").createOrReplaceTempView("g_lineitem")
     // g_sum4u/g_revrow4u: the 128-bit integer spellings of the decimal
-    // sums (registered session functions, bit-identical values —
-    // Tables.registerIntSums). Every pipe-syntax parser surface of the
-    // original (WHERE / EXTEND / AGGREGATE..GROUP BY / ORDER BY) is
-    // unchanged; EXTEND now carries the exact 1e4-scaled BIGINT revenue
+    // sums (session functions from GraftExtensions, bit-identical
+    // values). Every pipe-syntax parser surface of the original (WHERE /
+    // EXTEND / AGGREGATE..GROUP BY / ORDER BY) is unchanged; EXTEND now carries the exact 1e4-scaled BIGINT revenue
     // term instead of the DECIMAL product — same quantization casts,
     // same summed value through DECIMAL(38,4) -> DOUBLE.
-    registerIntSums(s)
     s.sql(
       """FROM g_lineitem
         ||> WHERE l_shipdate < TIMESTAMP '2001-01-01 00:00:00'

@@ -67,8 +67,6 @@ object QRound7 extends QueryPack {
 
   /** The raw (un-memoized) index dataflow behind [[ivfpqIndex]]. */
   private[operators] def ivfpqIndexBuild(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = QSim.embPersisted(s, d)
     e.count() // materialize the shared cache before concurrent fits race to build it
     // coarse + 4 subspace codebooks are independent fits: train them as 5
@@ -104,8 +102,6 @@ object QRound7 extends QueryPack {
   }
 
   private def simAnnIvfpq(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = QSim.embPersisted(s, d)
     val cand = ivfpqIndex(s, d)
     // query-side: route each query through the coarse cells — the only

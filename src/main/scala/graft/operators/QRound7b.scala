@@ -79,8 +79,6 @@ object QRound7b extends QueryPack {
 
   /** The raw (un-memoized) verdict dataflow behind [[semdedupVerdict]]. */
   private[graft] def semdedupVerdictBuild(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = QSim.embPersisted(s, d)
     val cent = AnnKMeans.centroidsMemo(s, d, "emb", sdCells, sdIters)(e)
     // nearest cell per vector + similarity to the OWN cell centroid (the
@@ -411,8 +409,6 @@ object QRound7b extends QueryPack {
       .cast(DoubleType) / lit(1e12))
 
   private def embPcaProject(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VecCentroid.register(s)
-    graft.plans.DotLong.register(s)
     val (mean, z1, _) = pcaFit(s, d)
     pcaCentered(s, d, mean)
       .select(col("vec_id"), pcaProjCol(z1).as("pc1"))
@@ -428,8 +424,6 @@ object QRound7b extends QueryPack {
     * the determinism guarantees of the PC1 key; the fit is shared via the
     * same Memo, so the pair of keys trains once. */
   private def embPcaProject2(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VecCentroid.register(s)
-    graft.plans.DotLong.register(s)
     val (mean, z1, z2) = pcaFit(s, d)
     pcaCentered(s, d, mean)
       .select(col("vec_id"), pcaProjCol(z1).as("pc1"), pcaProjCol(z2).as("pc2"))

@@ -29,11 +29,9 @@ object QRound8 extends QueryPack {
     * (training is not SQL-expressible) — Round8Spec gates two-run
     * determinism (driving ChurnModel.trainEvalMlp directly so the gate
     * re-runs the real 35-iteration fit), AUC bounds, and confusion
-    * conservation, mirroring `chp_train_auc`. Result memoized per
-    * (session, sfDir) — OPTIMIZATION r17, the trained network row is
-    * per-corpus model state (3.2 s warm was pure refit). */
+    * conservation, mirroring `chp_train_auc`. Every call runs the fit. */
   private def chpTrainMlp(s: SparkSession, d: String): DataFrame =
-    graft.Memo.memo(s, "chptrainmlp", d)(ChurnModel.trainEvalMlp(s, d))
+    ChurnModel.trainEvalMlp(s, d)
 
   // ---- span-cut corpus rewrite ----
 

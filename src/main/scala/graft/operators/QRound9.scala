@@ -132,8 +132,6 @@ object QRound9 extends QueryPack {
     * table is memoized + persisted: the beam loop references it once per
     * round, and it is index state, not a per-query scan. */
   private def simAnnNsw(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = QSim.embPersisted(s, d)
     val cent = AnnKMeans.centroidsMemo(s, d, "emb", nswCells, nswIters)(e)
     val edges = graft.Memo.memo(s, "nswedges", d)(
@@ -211,7 +209,6 @@ object QRound9 extends QueryPack {
     * under 3 tokens have no shingles and emit no band rows (they are
     * admitted vacuously by the rollup). */
   private[graft] def minhashBandRows(docs: DataFrame): DataFrame = {
-    graft.functions.TrigramShingles.register(docs.sparkSession)
     val withSh = docs
       .select(col("doc_id"), col("ts"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 3)

@@ -126,7 +126,6 @@ object QRound9aj extends QueryPack {
     * (one pass, fused cosine kernel); per-anchor argmin/argmax are
     * windows partitioned by anchor. */
   private[graft] def tripletMining(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
     val e = t(s, d, "embeddings")
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), x => x.cast(DoubleType)).as("v"))

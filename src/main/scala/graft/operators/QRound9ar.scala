@@ -37,8 +37,6 @@ object QRound9ar extends QueryPack {
     * scan computes all rep similarities (fused kernel) and the per-vector
     * max folds in the aggregate; the final rollup is one row. */
   private[graft] def coverageEval(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = t(s, d, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast(DoubleType)).as("v"))

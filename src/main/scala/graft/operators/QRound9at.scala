@@ -39,7 +39,6 @@ object QRound9at extends QueryPack {
     * skew); the rollup is one row. At 100 TB the same plan holds — the
     * bucket count scales with the corpus to keep |b| bounded. */
   private[graft] def uniformityMetric(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
     val dd = DoubleType
     val e = t(s, d, "embeddings")
       .select(col("vec_id"),

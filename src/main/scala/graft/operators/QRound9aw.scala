@@ -208,8 +208,6 @@ object QRound9aw extends QueryPack {
     * Scale shape: per k one corpus scan against k broadcast centroids
     * with a map-side max fold; the union is 3 one-row branches. */
   private[graft] def kmeansElbow(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val dd = DoubleType
     val e = t(s, d, "embeddings")
       .select(col("vec_id"),

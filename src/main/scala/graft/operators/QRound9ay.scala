@@ -33,7 +33,6 @@ object QRound9ay extends QueryPack {
     * Scale shape: one corpus pass builds both centroids (64-dim model
     * state); everything after is a 64-row computation. */
   private[graft] def centroidDrift(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VecCentroid.register(s)
     val dd = DoubleType
     val e = t(s, d, "embeddings")
       .select(col("vec_id"),

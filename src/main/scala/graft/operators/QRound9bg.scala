@@ -35,8 +35,6 @@ object QRound9bg extends QueryPack {
     * Scale shape: feedback sets come from the memoized top-k; the
     * re-query is one broadcast scan (5 expanded queries × corpus). */
   private[graft] def rocchioExpand(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val dd = DoubleType
     val e = t(s, d, "embeddings")
       .select(col("vec_id"),

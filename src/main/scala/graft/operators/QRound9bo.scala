@@ -121,7 +121,6 @@ object QRound9bo extends QueryPack {
     * per-anchor window ranks |corpus| candidate rows; production keeps
     * the anchor count fixed as data grows. */
   private[graft] def intrinsicDim(s: SparkSession, d: String): DataFrame = {
-    graft.plans.SqDistLong.register(s)
     val qe = t(s, d, "embeddings").select(col("vec_id"),
       expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1e6 + 5e-1) AS BIGINT))")
         .as("q"))

@@ -231,7 +231,6 @@ object QRound9bs extends QueryPack {
     * same pass (la == lb rows). At corpus scale the same statistic
     * runs on per-label uniform samples. */
   private[graft] def energyDistance(s: SparkSession, d: String): DataFrame = {
-    graft.plans.SqDistLong.register(s)
     val qe = t(s, d, "embeddings").select(col("vec_id"), col("label"),
       expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1e6 + 5e-1) AS BIGINT))")
         .as("q"))

@@ -182,7 +182,6 @@ object QRound9bt extends QueryPack {
     // .SqDiffSum): the HOF spelling aggregate(zip_with(...)) interprets
     // two lambdas per element with boxed Longs and dominated the warm
     // pair stage (~1.4 s for 62.5k pairs)
-    graft.functions.SqDiffSum.register(s)
     val pairs = anch.crossJoin(cand)
       .select(
         expr("sq_diff_sum(qa, qb)").as("d2o"),

@@ -277,7 +277,6 @@ object QRound9by extends QueryPack {
     }
 
   private[graft] def tfidfNn(s: SparkSession, d: String): DataFrame = {
-    graft.plans.SortedDotLong.register(s)
     val docs = t(s, d, "documents")
     val parts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val cand = tfidfNnCands(s, d).repartition(parts, col("da"))

@@ -220,7 +220,6 @@ object QRound9ca extends QueryPack {
     * Scale shape: one a<b self-join (bounded N²/2) with the codegen'd
     * exact-integer distance; the bandwidth is one broadcast scalar. */
   private[graft] def mmdRbf(s: SparkSession, d: String): DataFrame = {
-    graft.plans.SqDistLong.register(s)
     val qe = t(s, d, "embeddings").select(col("vec_id"), col("label"),
       expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1e6 + 5e-1) AS BIGINT))")
         .as("q"))

@@ -179,7 +179,6 @@ object QRound9cf extends QueryPack {
     * Scale shape: two bounded anchor×corpus scans on the codegen'd
     * sqdist_q kernel; overlap is a tiny join. */
   private[graft] def neighborPreservation(s: SparkSession, d: String): DataFrame = {
-    graft.plans.SqDistLong.register(s)
     // the memoized (vec_id, q, pq) JL index shared with
     // emb_jl_projection — one spelling, one build (ADVICE-r13-style
     // dedup: the re-spelled copy here could drift from the declared

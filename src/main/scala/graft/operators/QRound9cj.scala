@@ -171,8 +171,6 @@ object QRound9cj extends QueryPack {
     * Scale shape: centroids broadcast; top-2 scores fold map-side (the
     * assignProbes shuffle shape); one bounded (cell) rollup. */
   private[graft] def silhouette(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = t(s, d, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast(DoubleType)).as("v"))

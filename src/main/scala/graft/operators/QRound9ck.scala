@@ -209,8 +209,6 @@ object QRound9ck extends QueryPack {
     * with the same keying); the three vector fetches are uniform
     * equi-joins. */
   private[graft] def contrastivePairs(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = t(s, d, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast(DoubleType)).as("v"))

@@ -103,7 +103,6 @@ object QRound9k extends QueryPack {
     * rounds → the oracle unrolls them as MATERIALIZED CTEs. */
   private[graft] def kcenterCoreset(s: SparkSession, emb: DataFrame)
       : DataFrame = {
-    graft.plans.CosineSim.register(s)
     var centers = Seq(emb.select(min(col("vec_id"))).head().getLong(0))
     for (_ <- 1 until kCenters) {
       val cdf = emb.filter(col("vec_id").isin(centers: _*))

@@ -40,7 +40,6 @@ object QRound9m extends QueryPack {
     // The UNPIVOT parser clause — the point of this key — is unchanged;
     // the Expand tripled the row count, so the per-row decimal buffer
     // cost was paid 3x here (1.34 s warm, the slowest sql_* key).
-    registerIntSums(s)
     s.sql(
       """SELECT metric, count(*) AS n, min(v) AS min_v, max(v) AS max_v,
         |  CAST(g_sum4u(v) AS DOUBLE) AS sum_v
@@ -154,8 +153,6 @@ object QRound9m extends QueryPack {
     * shuffles dim+1 longs per label). */
   private[graft] def outlierScore(s: SparkSession, emb: DataFrame)
       : DataFrame = {
-    graft.functions.VecCentroid.register(s)
-    graft.plans.CosineSim.register(s)
     val cent = emb.groupBy("label")
       .agg(expr("vec_centroid(v)").as("cv0"))
       .select(col("label").as("lc"),

@@ -73,7 +73,6 @@ object QRound9x extends QueryPack {
     * by the memoized exact top-k ranking. The unrolled-CTE oracle
     * replays the same integer recursion. */
   private[graft] def mmrRerank(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
     val top = QSim.simCosineTopk(s, d)
     val emb = QSim.embPersisted(s, d)
     val cand = top.select(col("qid"), col("vec_id"),

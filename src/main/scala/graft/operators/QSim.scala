@@ -31,8 +31,7 @@ object QSim extends QueryPack {
   /** Native fused-loop cosine kernel (see graft.plans.CosineSim). The
     * equivalent pure-HOF spelling — aggregate(zip_with(a,b,(x,y)=>x*y),...)
     * — is semantically identical but far slower (per-row allocation,
-    * interpreted lambda); the kernel codegens into the join stage.
-    * Callers must CosineSim.register(spark) once per query. */
+    * interpreted lambda); the kernel codegens into the join stage. */
   private def cosine(a: String, b: String): Column =
     expr(s"cosine_sim($a, $b)")
 
@@ -62,7 +61,6 @@ object QSim extends QueryPack {
     * three keys (this one, sim_ann_recall, sim_ann_ivfpq) consume the same
     * exact ranking, and it is ground-truth state, not a per-query scan. */
   private[operators] def simCosineTopk(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
     graft.Memo.memo(s, "brutetopk", d) {
       val q = embD(s, d).filter(col("vec_id") < 20)
         .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -100,7 +98,6 @@ object QSim extends QueryPack {
     * double avg() was not). The posexplode here runs AFTER aggregation, on
     * #labels rows, purely to shape the (label, pos, c) output. */
   private def embCentroid(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VecCentroid.register(s)
     embD(s, d)
       .groupBy("label")
       .agg(expr("vec_centroid(v)").as("cv"))
@@ -137,8 +134,6 @@ object QSim extends QueryPack {
     * exactly); OperatorSpec measures recall = 1.0 on planted clustered
     * data, where real near-dup corpora live. */
   private def dedupEmbCosine(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     // each Lloyd iteration + both probe branches re-scan e — session-shared
     // persisted instance (see embPersisted)
     val e = embPersisted(s, d)
@@ -170,8 +165,6 @@ object QSim extends QueryPack {
   // ---- IVF-style ANN: route query to nearest centroid cell, search cell ----
 
   private def simAnnIvf(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = embD(s, d)
     // cell centroids in one pass (deterministic scaled-long mean — a raw
     // double avg() could flip a trunc4 digit with partition count and
@@ -235,8 +228,6 @@ object QSim extends QueryPack {
     * Recall@10 vs brute force is gated in OperatorSpec on clustered data
     * (this testdata's embeddings are near-random — see dedupEmbCosine). */
   private def simAnnKmeans(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     // persisted across the Lloyd iterations + final assignment —
     // session-shared instance (see embPersisted)
     val e = embPersisted(s, d)
@@ -330,13 +321,9 @@ object QSim extends QueryPack {
       : DataFrame =
     graft.Memo.memo(s, "knnjoin", d)(knnJoinBuild(s, d).localCheckpoint(true))
 
-  /** The raw (un-memoized) kNN-join dataflow — exposed so the r17 plan
-    * snapshot shows the salted pair join (post-memo plans show only the
-    * checkpoint scan). */
-  private[graft] def knnJoinBuild(s: SparkSession, d: String): DataFrame = {
+  /** The raw (un-memoized) kNN-join dataflow behind [[knnJoinPersisted]]. */
+  private def knnJoinBuild(s: SparkSession, d: String): DataFrame = {
     {
-      graft.plans.CosineSim.register(s)
-      graft.functions.VecCentroid.register(s)
       val e = embPersisted(s, d)
       val cent = AnnKMeans.centroidsMemo(s, d, "emb", kmCells, kmIters)(e)
       // materialized once — the a/b sides below otherwise re-run the

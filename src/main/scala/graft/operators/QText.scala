@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.QueryPack
-import graft.functions.BigramExplode
 import graft.sources.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -57,7 +56,6 @@ object QText extends QueryPack {
   private val viewSeq = new java.util.concurrent.atomic.AtomicLong()
 
   private def textNgramBigram(s: SparkSession, d: String): DataFrame = {
-    BigramExplode.register(s)
     val view = s"graft_docs_toks_${viewSeq.incrementAndGet()}"
     docsToks(s, d).createOrReplaceTempView(view)
     try s.sql(
@@ -199,7 +197,6 @@ object QText extends QueryPack {
     * 25 planted near-dup pairs). Native expression — the HOF spelling
     * interprets its lambda per token (see TrigramShingles). */
   private def shingled(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TrigramShingles.register(s)
     // repartition before shingling: the testdata parquet is one row group,
     // so without it the entire shingle+signature map pipeline (8 md5s per
     // shingle) runs inside the single scan task; one cheap shuffle of the

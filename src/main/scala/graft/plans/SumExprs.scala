@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * aggregates (guide §4: prefer codegen-able DeclarativeAggregate over
   * interpreted per-row Decimal math).
   *
-  * Problem measured first (FloorProbe, sf0.1, warm): a groupBy with the
+  * Problem measured first (sf0.1, warm): a groupBy with the
   * house decimal aggregates (`sum4`, `sum(revenue)`, `sum(charge)`) runs
   * 1.24–1.41 s while the identical shape with LONG sum buffers runs
   * 0.60 s — Spark's SUM over DECIMAL(18,4) carries a DECIMAL(28,4)

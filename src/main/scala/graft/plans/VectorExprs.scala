@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -79,14 +78,6 @@ object CosineSim {
     }
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
-
-  /** Register `cosine_sim(a, b)` as a SQL function for this session;
-    * use via expr("cosine_sim(x, y)"). */
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("cosine_sim",
-        (exprs: Seq[Expression]) => CosineSim(exprs.head, exprs(1)), "scala_udf")
 }
 
 /** Native kernel for EXACT squared Euclidean distance over ARRAY<BIGINT>
@@ -138,12 +129,6 @@ object SqDistLong {
     }
     acc
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("sqdist_q",
-        (exprs: Seq[Expression]) => SqDistLong(exprs.head, exprs(1)), "scala_udf")
 }
 
 /** Native kernel for the EXACT long dot product Σ a_i·b_i over
@@ -196,12 +181,6 @@ object DotLong {
     }
     acc
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("dot_q",
-        (exprs: Seq[Expression]) => DotLong(exprs.head, exprs(1)), "scala_udf")
 }
 
 /** Native kernel for the SPARSE exact long dot product over two
@@ -271,11 +250,4 @@ object SortedDotLong {
     }
     acc
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("sorted_dot",
-        (exprs: Seq[Expression]) =>
-          SortedDotLong(exprs(0), exprs(1), exprs(2), exprs(3)), "scala_udf")
 }

@@ -67,7 +67,7 @@ object Tables {
 
   // ---- 128-bit integer spellings of the exact sums (OPTIMIZATION r16) ----
   //
-  // Measured first (FloorProbe, guide §1): Spark's SUM over DECIMAL(18,4)
+  // Measured first (guide §1): Spark's SUM over DECIMAL(18,4)
   // carries a DECIMAL(28,4) buffer — past Decimal's 18-digit compact-long
   // range — so every per-row update allocates java.math.BigDecimals; a
   // 4-sum groupBy ran 1.24–1.41 s warm at sf0.1 vs 0.60 s with integer
@@ -168,42 +168,6 @@ object Tables {
   private def unscaledD42(c: Column): Column =
     expr2col(org.apache.spark.sql.catalyst.expressions.UnscaledValue(
       col2expr(c.cast(D42))))
-
-  /** Register the 128-bit sums as SQL temp functions so the SQL-TEXT
-    * surface keys (pipe syntax, UNPIVOT, TPC-H Q3 text) can use the same
-    * fast aggregates as the DataFrame API:
-    *  - `g_sum4u(x)`   == SUM(CAST(x AS DECIMAL(18,4))) as DECIMAL(38,4)
-    *  - `g_revsum4u(p, d)` == SUM(CAST(p AS DECIMAL(12,2)) *
-    *    (1 - CAST(d AS DECIMAL(4,2)))) as DECIMAL(38,4)
-    * (same per-row quantization casts; only the accumulation changes —
-    * values bit-identical, see sum128). Idempotent per session. */
-  def registerIntSums(s: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.expressions._
-    val reg = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("g_sum4u",
-      (es: Seq[Expression]) =>
-        graft.plans.SumUnscaled128(UnscaledValue(Cast(es.head, D184)), 4),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("g_revsum4u",
-      (es: Seq[Expression]) =>
-        graft.plans.SumUnscaled128(
-          Multiply(
-            UnscaledValue(Cast(es.head, D122)),
-            Subtract(Literal(100L), UnscaledValue(Cast(es(1), D42)))), 4),
-      "scala_udf")
-    // scalar: the exact 1e4-scaled BIGINT revenue term per row
-    reg.createOrReplaceTempFunction("g_revrow4u",
-      (es: Seq[Expression]) =>
-        Multiply(
-          UnscaledValue(Cast(es.head, D122)),
-          Subtract(Literal(100L), UnscaledValue(Cast(es(1), D42)))),
-      "scala_udf")
-    // aggregate over an ALREADY-scaled BIGINT column
-    reg.createOrReplaceTempFunction("g_sumu4",
-      (es: Seq[Expression]) => graft.plans.SumUnscaled128(es.head, 4),
-      "scala_udf")
-  }
 
   // ---- Oracle-side (DuckDB SQL) twins of the helpers above ----
 

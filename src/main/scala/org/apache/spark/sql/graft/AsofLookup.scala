@@ -32,7 +32,8 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * merge pass is the shape native engines (kdb, QuestDB, DuckDB ASOF) use.
   *
   * Extension wiring is all public API: the strategy is registered through
-  * `spark.experimental.extraStrategies`; this file sits under
+  * `spark.experimental.extraStrategies` (by `GraftExtensions.install`) or
+  * injected by the `GraftExtensions` session extension; this file sits under
   * `org.apache.spark.sql` (the standard extension-library idiom, cf.
   * Sedona/Delta) only to reach `Dataset.ofRows` for wrapping the custom
   * logical node into a DataFrame.
@@ -142,15 +143,12 @@ case class AsofLookupExec(left: SparkPlan, right: SparkPlan,
 object AsofJoin {
 
   /** Append `as` = the greatest `rightTime` strictly before `leftTime`
-    * with matching key (null when none). Registers the planning strategy
-    * on first use (idempotent). */
+    * with matching key (null when none). Planned by [[AsofStrategy]],
+    * which `GraftExtensions.install` puts on the session. */
   def lookup(left: DataFrame, right: DataFrame,
       leftKey: String, leftTime: String,
       rightKey: String, rightTime: String, as: String): DataFrame = {
     val spark = left.sparkSession.asInstanceOf[ClassicSparkSession]
-    if (!spark.experimental.extraStrategies.contains(AsofStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsofStrategy
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String): Attribute =

@@ -28,7 +28,6 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("CosineSim kernel == HOF spelling, and cos(v,v) == 1") {
-    graft.plans.CosineSim.register(spark)
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), transform(col("embedding"),
         x => x.cast("double")).as("v"))
@@ -57,7 +56,6 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("bigram generator: positions and pairs") {
-    graft.functions.BigramExplode.register(spark)
     import spark.implicits._
     val rows = Seq("a b c", "solo").toDF("text")
       .selectExpr("bigrams(split(text, ' ')) AS (pos, bigram)").collect()
@@ -130,7 +128,6 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("vec_centroid is bit-identical across input partitionings") {
-    graft.functions.VecCentroid.register(spark)
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("label"), expr("transform(embedding, x -> cast(x as double))").as("v"))
     def centroids(parts: Int): Map[Int, Seq[Double]] =
@@ -161,8 +158,6 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("k-means ANN: recall@10 >= 0.9 vs brute force on clustered data") {
-    graft.plans.CosineSim.register(spark)
-    graft.functions.VecCentroid.register(spark)
     import spark.implicits._
     val e = planted(10, 200, 16, 0.1).toDF("vec_id", "v")
     val cent = graft.operators.AnnKMeans.centroids(e, 10, 3)
@@ -189,8 +184,6 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("IVF-bucketed dedup: full recall of planted near-dup pairs") {
-    graft.plans.CosineSim.register(spark)
-    graft.functions.VecCentroid.register(spark)
     import spark.implicits._
     // 100 base points in 10 clusters; points i and i+100 are near-dups
     val base = planted(10, 100, 16, 0.3)

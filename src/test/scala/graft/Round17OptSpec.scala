@@ -99,7 +99,6 @@ class Round17OptSpec extends SparkSpec {
     * weights, subset overlap). */
   test("sorted_dot == join-aggregate sparse dot, on real postings") {
     import spark.implicits._
-    graft.plans.SortedDotLong.register(spark)
     // unit edges
     val cases = Seq(
       (Seq("a", "b", "c"), Seq(2L, 3L, 5L), Seq("b", "c", "d"),

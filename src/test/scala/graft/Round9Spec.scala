@@ -21,8 +21,6 @@ class Round9Spec extends SparkSpec {
   }
 
   test("sim_ann_nsw: recall@10 >= 0.8 vs brute force on clustered data") {
-    graft.plans.CosineSim.register(spark)
-    graft.functions.VecCentroid.register(spark)
     import spark.implicits._
     val e = planted(10, 200, 16, 0.1).toDF("vec_id", "v")
     val cent = operators.AnnKMeans.centroids(e, 8, 3)
